@@ -246,7 +246,17 @@ def insert_if_absent(base: DataFrame, new_rows: DataFrame, keys: Sequence[str]) 
     else:
         new_rows = new_rows.distinct()
     fresh = new_rows.join(base.select(*keys).distinct(), on=keys, how="left_anti")
-    return base.unionByName(fresh.select(*base.columns))
+    # base columns the new rows lack (added to the table after they were
+    # shaped, e.g. company-match results) insert as NULL
+    base_types = dict(base.dtypes)
+    return base.unionByName(
+        fresh.select(
+            *[
+                F.col(c) if c in fresh.columns else F.lit(None).cast(base_types[c]).alias(c)
+                for c in base.columns
+            ]
+        )
+    )
 
 
 def fold_upsert_statements(

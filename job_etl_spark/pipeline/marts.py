@@ -1,14 +1,16 @@
 """Marts stage (reference parity: entry point C — the two dbt models as
 PySpark transforms).
 
+Both are incremental merge statements, applied by ``TableStore.merge``.
+
 ``dim_companies`` (``dbt/job_dbt/models/marts/dim_companies.sql:1-45``):
-SCD1 incremental on a created_at high-watermark; company = coalesce(name,
-'unknown').
+SCD1 incremental, the companies not in the dimension yet; company =
+coalesce(name, 'unknown').
 
 ``fact_jobs`` (``dbt/job_dbt/models/marts/fact_jobs.sql:23-109``):
 incremental on first_seen_at > MAX(ingested_at); company_id derived from
-the company name (J1 company join is broadcast); J2 self-join carries
-forward existing rank_score/rank_explain on rebuild.
+the company name (J1 company join is broadcast); the J2 rank carry keeps
+existing rank_score/rank_explain through ``fact_merge_policy``.
 """
 
 from __future__ import annotations
@@ -20,9 +22,12 @@ from job_etl_spark.functions.identity import company_id_expr
 from job_etl_spark.operators.watermark import high_watermark
 
 
-def build_dim_companies(companies: DataFrame, existing: DataFrame | None = None) -> DataFrame:
-    """SCD1: take rows newer than the existing watermark, union, keep the
-    latest row per company_id."""
+def dim_increment(companies: DataFrame, existing: DataFrame | None = None) -> DataFrame:
+    """The dim_companies merge statement: the companies ``existing`` does
+    not hold yet (all of them when there is no dimension). Every dim
+    attribute is immutable once seeded — company_id is a function of the
+    name, and staging_companies only ever inserts — so the new keys are
+    the whole change, and latest-wins applies them."""
     sel = companies.select(
         "company_id",
         F.coalesce(F.col("name"), F.lit("unknown")).alias("company"),
@@ -34,12 +39,7 @@ def build_dim_companies(companies: DataFrame, existing: DataFrame | None = None)
     )
     if existing is None:
         return sel
-    wm = high_watermark(existing, "created_at")
-    fresh = sel.where(F.col("created_at") > F.lit(wm))
-    from job_etl_spark.operators.dedup_window import distinct_on
-
-    merged = existing.unionByName(fresh, allowMissingColumns=True)
-    return distinct_on(merged, ["company_id"], [F.desc("created_at"), F.asc("company")])
+    return sel.join(existing.select("company_id"), "company_id", "left_anti")
 
 
 #: fact_jobs column order (the dbt model's SELECT list,
@@ -73,10 +73,9 @@ RANK_CARRY_COLS = ["rank_score", "rank_explain"]
 
 
 def fact_merge_policy() -> dict:
-    """The fact_jobs per-column merge classes — ONE spec consumed by both
-    write paths, so the COW rebuild (``build_fact_jobs`` below) and the
-    merge-on-read delta fold (``TableStore.mor_init(..., policy=...)``)
-    cannot drift:
+    """The fact_jobs per-column merge classes, under which the marts
+    increment and the rank write-back are applied (``TableStore.merge``,
+    either layout):
 
     - every data column OVERWRITES (a re-seen hash_key takes the fresh
       staging projection — the dbt incremental's unique_key merge,
@@ -130,29 +129,12 @@ def fact_projection(new_rows: DataFrame, run_ts) -> DataFrame:
 def fact_increment(staging: DataFrame, existing_fact: DataFrame | None, run_ts) -> DataFrame:
     """The marts increment: staging rows past the fact watermark
     (``first_seen_at > MAX(ingested_at)``, ``fact_jobs.sql:23-31``),
-    projected with NULL rank columns. This frame is both the COW
-    rebuild's fresh half and, verbatim, the merge-on-read delta — under
-    ``fact_merge_policy`` the fold performs the rank carry that the COW
-    path expresses as the J2 self-join."""
+    projected with NULL rank columns: the marts merge statement, whose
+    COALESCE on the rank pair under ``fact_merge_policy`` performs the
+    J2 rank carry."""
     new_rows = staging
     if existing_fact is not None and existing_fact.head(1):
         wm = high_watermark(existing_fact, "ingested_at")
         new_rows = staging.where(F.col("first_seen_at") > F.lit(wm))
     return fact_projection(new_rows, run_ts)
 
-
-def build_fact_jobs(
-    staging: DataFrame, existing_fact: DataFrame | None, run_ts
-) -> DataFrame:
-    """Staging → fact projection with incremental watermark + rank carry."""
-    fact_new = fact_increment(staging, existing_fact, run_ts)
-    if existing_fact is None:
-        return fact_new
-    # J2: carry forward rank columns for already-known hash_keys
-    carried = fact_new.drop("rank_score", "rank_explain").join(
-        existing_fact.select("hash_key", "rank_score", "rank_explain"),
-        "hash_key",
-        "left",
-    )
-    untouched = existing_fact.join(fact_new.select("hash_key"), "hash_key", "left_anti")
-    return untouched.unionByName(carried.select(*existing_fact.columns))

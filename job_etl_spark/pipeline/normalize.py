@@ -123,10 +123,10 @@ def normalize_common(common: DataFrame, run_ts) -> NormalizeResult:
 
 
 def staging_merge_policy() -> dict:
-    """The J3 per-column merge classes — ONE spec consumed by both write
-    paths: the COW ``merge_into_staging`` below and the merge-on-read
-    delta fold (``TableStore.mor_init(..., policy=...)``), so the two
-    layouts cannot drift.
+    """The J3 per-column merge classes — ONE spec for every staging
+    write-back: the streaming sink's ``merge_into_staging`` below and
+    the pipeline's ``TableStore.merge`` (either layout), so they cannot
+    drift.
 
     The enricher-owned columns (seniority_level, the enrichment status)
     are KEEP-FIRST, not coalesce: normalize emits their non-null insert

@@ -2,8 +2,14 @@
 
 Replaces Airflow for single-process runs: extract → normalize → enrich →
 marts → rank → dq → report, with tables persisted as parquet between
-stages (a storage layer with atomic overwrite-rewrite; Delta MERGE drops
-in behind ``TableStore`` when available).
+stages (``pipeline/store.py``; Delta MERGE drops in behind ``TableStore``
+when available).
+
+Each mutating stage builds one keyed merge statement per table it writes
+and hands it to ``TableStore.merge``, which applies it by the table's
+layout. A stage never branches on the layout: its ``mor=True`` only
+migrates its target to merge-on-read, and from then on the layout
+belongs to the table.
 
 CLI contract mirrors the reference services: ``--limit --source --dry-run
 --verbose``, stats dict printed as JSON, exit codes 0 (ok), 1 (partial —
@@ -18,7 +24,7 @@ import json
 import sys
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from job_etl_spark.operators import dq
@@ -29,8 +35,12 @@ from job_etl_spark.pipeline.enrich import (
     enrich_skills,
     seed_company_records,
 )
-from job_etl_spark.pipeline.marts import build_dim_companies, build_fact_jobs
-from job_etl_spark.pipeline.normalize import merge_into_staging, normalize_common
+from job_etl_spark.pipeline.marts import (
+    dim_increment,
+    fact_increment,
+    fact_merge_policy,
+)
+from job_etl_spark.pipeline.normalize import normalize_common, staging_merge_policy
 from job_etl_spark.pipeline.rank import RankingConfig, rank_jobs
 from job_etl_spark.pipeline.store import TableStore
 from job_etl_spark.schema import (
@@ -61,27 +71,16 @@ def run_normalize(
     dry_run: bool = False,
     run_ts=None,
     mor: bool = False,
-    compact_every: int = 16,
     mor_buckets: int | None = None,
 ) -> dict:
     """S5 scan (+watermark) → U3/U2 → J3 merge. Exit-code semantics via
     'rejected' in the stats dict (main.py:289-354).
 
-    Write-back strategy follows the COW/MOR decision rule (COVERAGE.md
-    "Choosing COW vs MOR"). Default COW: full-outer COALESCE merge + full
-    staging rewrite — O(staging table) per batch, the write amplification
-    the r7 soak measured (COW p50 tracks table size; MOR stays flat).
-    ``mor=True`` is the 100 TB path: the normalized batch lands as ONE
-    merge-on-read delta — O(batch) per run — and reads fold the delta
-    stack through the SAME per-column policy (``staging_merge_policy``,
-    recorded in the table's _META at migration), so ``store.read`` of
-    either layout is bit-identical (pinned by test_pipeline_e2e +
-    randomized fold-parity tests). First ``mor=True`` call migrates the
-    COW files into the MOR layout. ``compact_every`` bounds the delta
-    chain: once that many deltas accumulate, the run folds them into a
-    new base (same knob as the streaming twin's ``compact_every``) —
-    read-side fan-in stays O(compact_every), write cost stays O(batch)
-    for every run except the 1-in-N compaction."""
+    The normalized batch is one keyed merge statement under
+    ``staging_merge_policy`` (the reference's batch upsert,
+    services/normalizer/db_operations.py:427-460), applied by
+    ``TableStore.merge`` under staging's layout. ``mor=True`` first
+    migrates staging to merge-on-read, into ``mor_buckets`` buckets."""
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     raw = store.read("raw_job_postings")
     if min_collected_at is not None:
@@ -90,40 +89,38 @@ def run_normalize(
         raw = raw.orderBy(F.desc("collected_at"), F.asc("raw_id")).limit(limit)
     common = common_from_raw(raw, adapter)
     res = normalize_common(common, run_ts)
+    # a dry run must not mutate ANYTHING, the layout included
+    if mor and not dry_run:
+        store.mor_migrate(
+            "staging_job_postings", ["hash_key"], staging_merge_policy(), mor_buckets,
+            STAGING_SCHEMA,
+        )
     # the batch plan is executed twice (row count for the stats/exit-code
     # contract, then the write) — pin it so the raw scan + normalize
     # expressions run once, not per action
     normalized = res.normalized.persist()
-    # try/finally: mor_upsert can raise (duplicate/null keys) — the cached
+    # try/finally: the merge can raise (duplicate/null keys) — the cached
     # blocks must not outlive the stage on the error path
     try:
         n_ok = normalized.count()
         n_bad = res.rejected.count()
         if not dry_run:
-            if mor:
-                from job_etl_spark.pipeline.normalize import staging_merge_policy
-
-                if not store.mor_exists("staging_job_postings"):
-                    store.mor_init(
-                        "staging_job_postings",
-                        store.read("staging_job_postings", STAGING_SCHEMA),
-                        ["hash_key"],
-                        policy=staging_merge_policy(),
-                        buckets=mor_buckets,
-                    )
-                if n_ok:  # an empty batch must not grow the delta chain
-                    store.mor_upsert("staging_job_postings", normalized)
-                    if compact_every and len(
-                        store.mor_deltas("staging_job_postings")
-                    ) >= compact_every:
-                        store.mor_compact("staging_job_postings")
-            else:
-                staging = store.read("staging_job_postings", STAGING_SCHEMA)
-                merged = merge_into_staging(staging, normalized)
-                store.rewrite("staging_job_postings", merged)
+            store.merge(
+                "staging_job_postings", normalized, ["hash_key"], staging_merge_policy()
+            )
     finally:
         normalized.unpersist()
     return {"normalized": n_ok, "rejected": n_bad, "dry_run": dry_run}
+
+
+#: the staging columns the enricher owns
+ENRICHED_COLS = ["skills_raw", "seniority_level", "seniority_enrichment_status"]
+
+#: staging_companies as the enrich stage seeds it (read before it exists)
+COMPANIES_SCHEMA = (
+    "company_id string, name string, source_first_seen string, "
+    "enriched_at timestamp, created_at timestamp, updated_at timestamp"
+)
 
 
 def run_enrich(
@@ -134,85 +131,58 @@ def run_enrich(
     dry_run: bool = False,
     run_ts=None,
     mor: bool = False,
-    compact_every: int = 16,
     mor_buckets: int | None = None,
 ) -> dict:
     """S6/S7 scans → U4/U5 → J6 write-back.
 
-    Write-back strategy follows the COW/MOR decision rule (COVERAGE.md
-    "Choosing COW vs MOR"). Default COW: full-table withColumn stages +
-    staging rewrite — O(table) per enrich run. ``mor=True`` is the 100 TB
-    path and matches the reference's ACTUAL shape — its enricher is a
-    keyed point-UPDATE of the PENDING rows only (S6/S7 select the pending
-    subset, services/enricher/db_operations.py:140-176,244-282): compute
-    skills/seniority for the pending subset and land it as ONE
-    merge-on-read delta carrying just (hash_key, skills_raw,
-    seniority_level, seniority_enrichment_status) with OVERWRITE
+    Like the reference's enricher, a keyed point-UPDATE of the PENDING
+    rows only (S6/S7 select the pending subset,
+    services/enricher/db_operations.py:140-176,244-282): skills and
+    seniority are computed for the pending subset, and the statement
+    carries just (hash_key, ``ENRICHED_COLS``) with OVERWRITE
     per-statement classes — the staging policy keeps those columns
-    keep-first for normalize statements, so the delta's _CLASSES sidecar
-    overrides them for this statement only. Write cost O(pending), never
-    O(table); the read folds mixed normalize/enrich statements through
-    ``fold_upsert_statements`` bit-identically to the COW chain."""
+    keep-first for normalize statements. The columns it does not carry
+    are left as they are, in either layout (``TableStore.merge``).
+    ``mor=True`` first migrates staging to merge-on-read."""
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     # a dry run must not mutate ANYTHING, the layout included
-    if mor and not dry_run and not store.mor_exists("staging_job_postings"):
-        from job_etl_spark.pipeline.normalize import staging_merge_policy
-
-        store.mor_init(
-            "staging_job_postings",
-            store.read("staging_job_postings", STAGING_SCHEMA),
-            ["hash_key"],
-            policy=staging_merge_policy(),
-            buckets=mor_buckets,
+    if mor and not dry_run:
+        store.mor_migrate(
+            "staging_job_postings", ["hash_key"], staging_merge_policy(), mor_buckets,
+            STAGING_SCHEMA,
         )
     staging = store.read("staging_job_postings", STAGING_SCHEMA)
     dictionary = SkillsDictionary.load(dictionary_path)
-    pending_rows = None
-    # try/finally: mor_upsert can raise (duplicate/null keys) — the cached
+    # the pending subset: exactly the rows either enrichment phase would
+    # touch (S6 skills predicate ∪ S7 seniority-pending). Materialize it
+    # ONCE — the before_pending stat, the enrich expressions, the
+    # statement count and the write all run over the pinned subset
+    # instead of re-scanning the table per action.
+    skills_cond = F.col("description").isNotNull()
+    if not include_existing:
+        skills_cond = skills_cond & (
+            F.col("skills_raw").isNull() | (F.size("skills_raw") == 0)
+        )
+    if sources:
+        skills_cond = skills_cond & F.col("source").isin(sources)
+    pending_rows = staging.where(
+        skills_cond | (F.col("seniority_enrichment_status") == "not_tried")
+    ).persist()
+    # try/finally: the merge can raise (duplicate/null keys) — the cached
     # pending subset must not outlive the stage on the error path
     try:
-        if mor:
-            # the pending subset: exactly the rows either enrichment phase
-            # would touch (S6 skills predicate ∪ S7 seniority-pending).
-            # Materialize it ONCE — the before_pending stat, the enrich
-            # expressions, the delta count, and the delta write all run over
-            # the pinned subset instead of re-scanning the table per action
-            # (the probe showed the stat scan costing as much as the write
-            # savings at 3M rows).
-            skills_cond = F.col("description").isNotNull()
-            if not include_existing:
-                skills_cond = skills_cond & (
-                    F.col("skills_raw").isNull() | (F.size("skills_raw") == 0)
-                )
-            if sources:
-                skills_cond = skills_cond & F.col("source").isin(sources)
-            pending_rows = staging.where(
-                skills_cond | (F.col("seniority_enrichment_status") == "not_tried")
-            ).persist()
-            before_pending = pending_rows.where(
-                F.col("seniority_enrichment_status") == "not_tried"
-            ).count()
-            enriched = enrich_skills(pending_rows, dictionary, sources, include_existing)
-            enriched = enrich_seniority(enriched)
-        else:
-            before_pending = staging.where(
-                F.col("seniority_enrichment_status") == "not_tried"
-            ).count()
-            enriched = enrich_skills(staging, dictionary, sources, include_existing)
-            enriched = enrich_seniority(enriched)
-        from job_etl_spark.schema import StructType  # noqa: F401
-
-        companies_schema = (
-            "company_id string, name string, source_first_seen string, "
-            "enriched_at timestamp, created_at timestamp, updated_at timestamp"
-        )
-        companies = store.read("staging_companies", companies_schema)
+        before_pending = pending_rows.where(
+            F.col("seniority_enrichment_status") == "not_tried"
+        ).count()
+        enriched = enrich_skills(pending_rows, dictionary, sources, include_existing)
+        statement = enrich_seniority(enriched).select("hash_key", *ENRICHED_COLS)
+        companies = store.read("staging_companies", COMPANIES_SCHEMA)
         # company seeding scans ALL distinct staging companies (J4 over the
-        # whole table), not just the pending rows — in MOR mode `enriched` is
-        # pending-only, so seed from the full merged view
-        companies2 = seed_company_records(companies, staging if mor else enriched, run_ts)
+        # whole table), not just the pending rows
+        companies2 = seed_company_records(companies, staging, run_ts)
         stats = {
             "seniority_pending_before": before_pending,
+            "enriched_rows": statement.count(),
             "dry_run": dry_run,
         }
         # company enrichment sub-phase (U6/J5/S13): runs when a cached
@@ -230,74 +200,20 @@ def run_enrich(
             stats["companies_matched"] = n_matched
             companies2 = apply_company_matches(companies2, matches, run_ts)
         if not dry_run:
-            if mor:
-                # O(pending) delta: keys + the three enricher-owned columns,
-                # OVERWRITE per-statement classes (the table policy keeps them
-                # keep-first for normalize statements). Empty pending must not
-                # grow the delta chain.
-                # (count + write both run over the pinned pending subset)
-                delta = enriched.select(
-                    "hash_key",
-                    "skills_raw",
-                    "seniority_level",
-                    "seniority_enrichment_status",
-                )
-                n_pending = delta.count()
-                stats["enriched_rows"] = n_pending
-                if n_pending:
-                    store.mor_upsert(
-                        "staging_job_postings",
-                        delta,
-                        classes={
-                            "overwrite": [
-                                "skills_raw",
-                                "seniority_level",
-                                "seniority_enrichment_status",
-                            ]
-                        },
-                    )
-                # companies2's plan reads the staging view lazily, but a delta
-                # APPEND never invalidates already-listed files — only the
-                # 1-in-N compaction swaps the base, so compact strictly last
-                store.rewrite("staging_companies", companies2)
-                stats["companies_total"] = store.read("staging_companies").count()
-                if compact_every and len(
-                    store.mor_deltas("staging_job_postings")
-                ) >= compact_every:
-                    store.mor_compact("staging_job_postings")
-            else:
-                # companies2's plan reads staging; two-phase swap avoids reading
-                # files deleted by the staging rewrite
-                store.rewrite_many(
-                    {"staging_job_postings": enriched, "staging_companies": companies2}
-                )
-                stats["companies_total"] = store.read("staging_companies").count()
+            # companies first: companies2's plan reads staging, which the
+            # merge below rewrites (COW) or may compact (MOR)
+            store.rewrite("staging_companies", companies2)
+            stats["companies_total"] = store.read("staging_companies").count()
+            store.merge(
+                "staging_job_postings",
+                statement,
+                ["hash_key"],
+                staging_merge_policy(),
+                classes={"overwrite": ENRICHED_COLS},
+            )
         return stats
     finally:
-        if pending_rows is not None:
-            pending_rows.unpersist()
-
-
-def _ensure_fact_mor(store: TableStore, buckets: int | None) -> None:
-    """One shared fact_jobs MOR table spec for every writer (marts
-    increment + rank write-back): keyed on hash_key under
-    ``fact_merge_policy`` — data columns overwrite, the rank pair
-    coalesces (the J2 carry). A table migrated latest-wins by pre-r11
-    code is upgraded in place (compact-then-set-policy), so a marts
-    delta with NULL rank columns can never be resolved wholesale and
-    silently null out landed scores."""
-    from job_etl_spark.pipeline.marts import fact_merge_policy
-
-    if not store.mor_exists("fact_jobs"):
-        store.mor_init(
-            "fact_jobs",
-            store.read("fact_jobs"),
-            ["hash_key"],
-            policy=fact_merge_policy(),
-            buckets=buckets,
-        )
-    elif store._mor_meta("fact_jobs").get("policy") is None:
-        store.mor_set_policy("fact_jobs", fact_merge_policy())
+        pending_rows.unpersist()
 
 
 def run_marts(
@@ -305,114 +221,46 @@ def run_marts(
     run_ts=None,
     mor: bool = False,
     mor_buckets: int | None = None,
-    compact_every: int = 16,
 ) -> dict:
-    """Marts stage: the two dbt models (dim_companies SCD1, fact_jobs
-    incremental + rank carry).
-
-    Write-back strategy follows the COW/MOR decision rule (COVERAGE.md
-    "Choosing COW vs MOR"). Default COW: rebuild-and-rewrite both marts
-    — O(table) per run even when the watermark admits zero rows, the
-    write amplification the dbt full-refresh model pays. ``mor=True`` is
-    the 100 TB path and matches the dbt INCREMENTAL semantics the models
-    declare (``fact_jobs.sql:23-31``, ``dim_companies.sql:38-44``): the
-    increment past each watermark lands as ONE merge-on-read delta —
-    O(new rows) per run, a no-op run touches no base file —
+    """Marts stage: the two dbt models as INCREMENTAL merge statements
+    (``fact_jobs.sql:23-31``, ``dim_companies.sql:38-44``), each applied
+    by ``TableStore.merge`` under its table's layout:
 
     - fact_jobs: ``fact_increment`` rows (NULL rank columns) under
-      ``fact_merge_policy`` — the fold's COALESCE on the rank pair IS
-      the J2 rank carry, so the COW self-join disappears;
-    - dim_companies: latest-wins keyed on company_id; the delta is the
-      rows past the created_at watermark (every dim attribute is
-      immutable post-seed — company_id is a function of the name — so
-      the created_at watermark is exact, not approximate).
+      ``fact_merge_policy`` — the COALESCE on the rank pair IS the J2
+      rank carry;
+    - dim_companies: latest-wins keyed on company_id, ``dim_increment``
+      rows (the companies the dimension does not hold yet).
 
-    First ``mor=True`` call migrates COW marts into the MOR layout;
-    ``compact_every`` bounds the fact delta chain as in the other
-    stages. Both layouts read bit-identically through ``store.read``
-    (dual-mode parity test)."""
+    ``mor=True`` first migrates both marts to merge-on-read: fact_jobs
+    into ``mor_buckets`` buckets, dim_companies flat (dimension-sized).
+    On a MOR table a run with nothing new lands no delta."""
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    staging = store.read("staging_job_postings", STAGING_SCHEMA)
-    companies = store.read(
-        "staging_companies",
-        "company_id string, name string, source_first_seen string, "
-        "enriched_at timestamp, created_at timestamp, updated_at timestamp",
-    )
     if mor:
-        return _run_marts_mor(
-            store, staging, companies, run_ts, mor_buckets, compact_every
-        )
+        store.mor_migrate("dim_companies", ["company_id"])
+        store.mor_migrate("fact_jobs", ["hash_key"], fact_merge_policy(), mor_buckets)
+    staging = store.read("staging_job_postings", STAGING_SCHEMA)
+    companies = store.read("staging_companies", COMPANIES_SCHEMA)
+    existing_dim = store.read("dim_companies") if store.exists("dim_companies") else None
+    dim_new = dim_increment(companies, existing_dim)
     existing_fact = store.read("fact_jobs") if store.exists("fact_jobs") else None
-    dim = build_dim_companies(companies, None)
-    fact = build_fact_jobs(staging, existing_fact, run_ts)
-    store.rewrite("dim_companies", dim)
-    store.rewrite("fact_jobs", fact)
-    return {"dim_rows": store.read("dim_companies").count(), "fact_rows": store.read("fact_jobs").count()}
+    fact_new = fact_increment(staging, existing_fact, run_ts)
 
-
-def _run_marts_mor(
-    store: TableStore,
-    staging: DataFrame,
-    companies: DataFrame,
-    run_ts,
-    mor_buckets: int | None,
-    compact_every: int,
-) -> dict:
-    from job_etl_spark.operators.watermark import high_watermark
-    from job_etl_spark.pipeline.marts import fact_increment, fact_merge_policy
-
-    stats: dict = {}
-    # -- dim_companies: latest-wins deltas past the created_at watermark.
-    # The COW build is a stateless projection of staging_companies, so
-    # migration and first build share one init frame. Dimension-sized →
-    # flat base (no buckets).
-    if not store.mor_exists("dim_companies"):
-        store.mor_init(
-            "dim_companies", build_dim_companies(companies, None), ["company_id"]
-        )
-        stats["dim_new"] = None  # init run: the whole projection is the base
-    else:
-        wm = high_watermark(store.read("dim_companies"), "created_at")
-        fresh = build_dim_companies(companies, None)
-        if wm is not None:
-            fresh = fresh.where(F.col("created_at") > F.lit(wm))
-        fresh = fresh.persist()  # count + delta write: one execution
+    def apply(name: str, statement, keys: list[str], policy: dict | None) -> int:
+        statement = statement.persist()  # counted for the stats, then written
         try:
-            n_dim = fresh.count()
-            stats["dim_new"] = n_dim
-            if n_dim:  # an empty increment must not grow the delta chain
-                store.mor_upsert("dim_companies", fresh)
+            n = statement.count()
+            store.merge(name, statement, keys, policy)
+            return n
         finally:
-            fresh.unpersist()
-    # -- fact_jobs: the increment as ONE delta under fact_merge_policy
-    # (rank carry via the fold's COALESCE — no self-join, no base write)
-    had_fact = store.exists("fact_jobs")
-    if not store.mor_exists("fact_jobs") and not had_fact:
-        # first build: the full projection IS the base
-        store.mor_init(
-            "fact_jobs",
-            fact_increment(staging, None, run_ts),
-            ["hash_key"],
-            policy=fact_merge_policy(),
-            buckets=mor_buckets,
-        )
-        stats["fact_new"] = None
-    else:
-        _ensure_fact_mor(store, mor_buckets)  # migrate/upgrade if needed
-        existing = store.read("fact_jobs")
-        inc = fact_increment(staging, existing, run_ts).persist()
-        try:
-            n_fact = inc.count()
-            stats["fact_new"] = n_fact
-            if n_fact:
-                store.mor_upsert("fact_jobs", inc)
-        finally:
-            inc.unpersist()
-        if compact_every and len(store.mor_deltas("fact_jobs")) >= compact_every:
-            store.mor_compact("fact_jobs")
-    stats["dim_rows"] = store.read("dim_companies").count()
-    stats["fact_rows"] = store.read("fact_jobs").count()
-    return stats
+            statement.unpersist()
+
+    return {
+        "dim_new": apply("dim_companies", dim_new, ["company_id"], None),
+        "fact_new": apply("fact_jobs", fact_new, ["hash_key"], fact_merge_policy()),
+        "dim_rows": store.read("dim_companies").count(),
+        "fact_rows": store.read("fact_jobs").count(),
+    }
 
 
 def run_rank(
@@ -425,24 +273,16 @@ def run_rank(
     mor: bool = False,
     mor_buckets: int | None = None,
 ) -> dict:
-    """Rank unranked fact rows and write the scores back.
-
-    Write-back strategy follows the COW/MOR decision rule (COVERAGE.md
-    "Choosing COW vs MOR"): the default COW path rewrites the whole fact
-    table — O(table) per run, fine while fact_jobs is dimension-sized.
-    ``mor=True`` is the fact-sized path: the ranked rows land as ONE
-    merge-on-read delta (``TableStore.mor_upsert``) and the rewrite is
-    deferred to ``mor_compact`` on its own schedule — write cost O(ranked
-    batch), never O(table). The r7 stream soak measured exactly this gap:
-    COW merge p50 tracks table size (684→907 ms across a 10× seed) while
-    MOR stays flat (464→507 ms); see ``streaming/pipeline.py::
-    foreach_batch_mor`` for the streaming twin of this path. First
-    ``mor=True`` call migrates the COW files into the MOR layout.
-    """
+    """Rank unranked fact rows and write the scores back: the ranked rows
+    are one merge statement under ``fact_merge_policy``, applied by
+    ``TableStore.merge`` under fact_jobs' layout. ``mor=True`` first
+    migrates fact_jobs to merge-on-read, into ``mor_buckets`` buckets;
+    ``streaming/pipeline.py::foreach_batch_mor`` is the streaming twin of
+    the merge-on-read write."""
     cfg = config or RankingConfig()
     # a dry run must not mutate ANYTHING, the layout included
     if mor and not dry_run:
-        _ensure_fact_mor(store, mor_buckets)
+        store.mor_migrate("fact_jobs", ["hash_key"], fact_merge_policy(), mor_buckets)
     fact = store.read("fact_jobs")  # MOR-aware: merged view either way
     target = F.lit(True) if rank_all else F.col("rank_score").isNull()
     if min_ingested_at is not None and not rank_all:
@@ -450,29 +290,18 @@ def run_rank(
     to_rank = fact.where(target)
     if limit:
         to_rank = to_rank.orderBy(F.desc("ingested_at"), F.asc("hash_key")).limit(limit)
-    # count + write(s) re-execute the scoring plan otherwise (the COW arm
-    # reads it twice more: key anti-join + the union) — pin it once
+    # count + write re-execute the scoring plan otherwise — pin it once
     ranked = rank_jobs(to_rank, None, cfg).persist()
-    # try/finally: mor_upsert can raise (duplicate/null keys) — the cached
+    # try/finally: the merge can raise (duplicate/null keys) — the cached
     # ranked batch must not outlive the stage on the error path
     try:
         n = ranked.count()
-        if not dry_run:
-            if mor:
-                if n:  # an empty batch must not grow the delta chain
-                    store.mor_upsert("fact_jobs", ranked.select(*fact.columns))
-            else:
-                untouched = fact.join(
-                    ranked.select("hash_key"), "hash_key", "left_anti"
-                )
-                store.rewrite(
-                    "fact_jobs", untouched.unionByName(ranked.select(*fact.columns))
-                )
         if dry_run:
             stats = {}
         else:
-            # store.read is MOR-aware, so downstream stages and these stats
-            # see the merged view regardless of write-back strategy
+            store.merge(
+                "fact_jobs", ranked.select(*fact.columns), ["hash_key"], fact_merge_policy()
+            )
             stats = report_mod.ranking_stats(store.read("fact_jobs"))
         return {"ranked_now": n, "dry_run": dry_run, **stats}
     finally:
@@ -542,9 +371,11 @@ def run_pipeline(
     mor_buckets: int | None = None,
 ) -> dict:
     """The full DAG slice on the mock source — SURVEY.md §7.1's 'one real
-    query' end-to-end. ``mor=True`` runs every mutable write-back
-    (normalize/enrich/rank) through the merge-on-read layout — the 100 TB
-    configuration — with ``mor_buckets`` selecting the bucketed base."""
+    query' end-to-end. ``mor=True`` migrates every mutable table to the
+    merge-on-read layout — the 100 TB configuration — with
+    ``mor_buckets`` selecting the bucketed base; the marts, which do not
+    exist before their first build, migrate on the next ``mor=True`` run
+    (or at the rank stage, for fact_jobs)."""
     warehouse = warehouse or tempfile.mkdtemp(prefix="jobspark_wh_")
     run_ts = run_ts or dt.datetime(2026, 1, 1, 7, 0, 0)
     store = TableStore(spark, warehouse)
@@ -630,17 +461,20 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--mor",
         action="store_true",
-        help="rank/normalize/enrich/marts stage: land the write-back as a "
-        "merge-on-read delta instead of a table rewrite (fact-sized tables; "
-        "COVERAGE.md 'Choosing COW vs MOR')",
+        help="rank/normalize/enrich/marts stage: first migrate the stage's "
+        "target table to merge-on-read (fact-sized tables; COVERAGE.md "
+        "'Choosing COW vs MOR'). The layout is chosen once per table: a "
+        "migrated table takes every later write-back as a delta, with or "
+        "without this flag",
     )
     parser.add_argument(
         "--mor-buckets",
         type=int,
         default=None,
-        help="with --mor: hash-bucket the base into N stable dirs at "
-        "migration so compaction rewrites only delta-touched buckets "
-        "(table-lifetime layout; pick N so a bucket is a few GB at scale)",
+        help="with --mor: hash-bucket the base into N stable dirs when the "
+        "table migrates, so compaction rewrites only delta-touched buckets "
+        "(ignored for an already-migrated table: the layout is chosen once; "
+        "pick N so a bucket is a few GB at scale)",
     )
     parser.add_argument("--include-existing", action="store_true")
     parser.add_argument("--dry-run", action="store_true")

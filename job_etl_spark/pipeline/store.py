@@ -1,5 +1,19 @@
-"""Table storage for the pipeline: copy-on-write parquet tables,
-snapshots, and the merge-on-read layout (``TableStore``)."""
+"""Table storage for the pipeline (``TableStore``).
+
+A table has one of two layouts:
+
+- copy-on-write (COW), the default: plain parquet files, replaced by an
+  atomic temp-dir swap on every write-back;
+- merge-on-read (MOR): a base plus a stack of immutable delta
+  statements, folded at read time and compacted into the base once the
+  stack reaches ``MOR_COMPACT_AT``.
+
+The layout is chosen once per table, at migration (``mor_migrate``),
+and from then on belongs to the table. Pipeline stages never branch on
+it: each hands its keyed merge statement to ``TableStore.merge``, which
+applies it by the table's layout. COVERAGE.md "Choosing COW vs MOR" has
+the measured costs of each.
+"""
 
 from __future__ import annotations
 
@@ -10,13 +24,20 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+#: a MOR table's delta chain is compacted into the base once it reaches
+#: this many deltas: reads fold at most this many statements, and the
+#: O(table) base rewrite is paid once per this many write-backs
+MOR_COMPACT_AT = 16
+
+_CLASSES = ("overwrite", "coalesce", "keep_first")
+
 
 class TableStore:
-    """Parquet-backed tables with read-modify-overwrite semantics.
+    """Parquet-backed tables under either layout (module docstring).
 
-    At 100 TB the overwrite becomes partition-scoped (partitionBy source/
-    ingest-date + dynamic partition overwrite) or a Delta MERGE; the runner
-    only touches this seam.
+    At 100 TB the COW overwrite becomes partition-scoped (partitionBy
+    source/ingest-date + dynamic partition overwrite) or a Delta MERGE;
+    the runner only touches this seam.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -146,8 +167,8 @@ class TableStore:
         A merge-on-read table stays MOR: the rewrite becomes a base
         replacement (the new frame already incorporates the deltas — it
         was read through the merged view) and the deltas are cleared, so
-        a stage-level rewrite (marts, enrich) never forks the table back
-        into a COW layout the MOR readers would miss."""
+        a whole-table rewrite never forks the table back into a COW
+        layout the MOR readers would miss."""
         if self.mor_exists(name):
             with self._mor_writer_lock(name):
                 tmp = self._mor_dir(name, "base._tmp")
@@ -160,28 +181,82 @@ class TableStore:
         self.spark.catalog.refreshByPath(tmp)
         self._swap_in(name, tmp)
 
-    def rewrite_many(self, updates: dict[str, DataFrame]) -> None:
-        """Two-phase multi-table rewrite: materialize every plan to a temp
-        dir FIRST, then swap — required when one table's new plan reads
-        another table being replaced in the same stage. MOR tables swap
-        their base (and clear deltas) instead of the COW dir."""
-        tmps = {}
-        for name, df in updates.items():
-            if self.mor_exists(name):
-                tmp = self._mor_dir(name, "base._tmp")
-                self._mor_write_base(name, df, tmp, self._mor_meta(name))
-            else:
-                tmp = self.path(f"__tmp_{name}")
-                df.write.mode("overwrite").parquet(tmp)
-                self.spark.catalog.refreshByPath(tmp)
-            tmps[name] = tmp
-        for name, tmp in tmps.items():
-            if self.mor_exists(name):
-                with self._mor_writer_lock(name):
-                    self._mor_swap_base(name, tmp)
-                    self._mor_update_columns(name, updates[name])
-            else:
-                self._swap_in(name, tmp)
+    def merge(
+        self,
+        name: str,
+        statement: DataFrame,
+        keys: Sequence[str],
+        policy: dict | None = None,
+        classes: dict | None = None,
+    ) -> None:
+        """Apply one keyed merge statement to ``name``, by its layout.
+
+        ``statement`` holds at most one row per key. ``policy`` gives the
+        column classes (``{"overwrite": [...], "coalesce": [...],
+        "keep_first": [...]}``, ``operators.merge.merge_upsert``); None is
+        latest-wins, where a statement row replaces its key's row.
+        ``classes`` overrides the policy for this statement only. A
+        statement may carry a subset of the columns: the ones it does not
+        carry are left as they are.
+
+        - A missing table is created from the statement.
+        - A COW table is rewritten with ``merge_upsert`` of the statement.
+        - A MOR table lands the statement as one delta (an empty statement
+          lands none), then compacts once the chain reaches
+          ``MOR_COMPACT_AT``. A MOR table recorded latest-wins adopts
+          ``policy`` first (``mor_set_policy``).
+
+        Both layouts read back the same rows (the dual-mode tests and the
+        fold-parity fuzzer pin this)."""
+        if not self.exists(name):
+            self.write(name, statement)
+        elif not self.mor_exists(name):
+            from job_etl_spark.operators.merge import merge_upsert
+
+            cls = (
+                {c: "overwrite" for c in statement.columns}
+                if policy is None
+                else {c: k for k in _CLASSES for c in policy.get(k, ())}
+            )
+            cls.update({c: k for k in _CLASSES for c in (classes or {}).get(k, ())})
+            # uncarried columns stay out of every class: merge_upsert then
+            # keeps the base value (an OVERWRITE class would null it)
+            carried = [c for c in statement.columns if c not in keys]
+            by_class = {
+                k: [c for c in carried if cls.get(c, "keep_first") == k] for k in _CLASSES
+            }
+            merged = merge_upsert(
+                self.read(name),
+                statement,
+                keys,
+                overwrite_cols=by_class["overwrite"],
+                coalesce_cols=by_class["coalesce"],
+                keep_first_cols=by_class["keep_first"],
+            )
+            self.rewrite(name, merged)
+        else:
+            if policy is not None:
+                self.mor_set_policy(name, policy)
+            self.mor_upsert(name, statement, classes)
+            if len(self.mor_deltas(name)) >= MOR_COMPACT_AT:
+                self.mor_compact(name)
+
+    def mor_migrate(
+        self,
+        name: str,
+        keys: Sequence[str],
+        policy: dict | None = None,
+        buckets: int | None = None,
+        schema=None,
+    ) -> None:
+        """Move ``name`` to the merge-on-read layout, once: a MOR table is
+        left as it is (``buckets`` only applies here), and every later
+        ``merge`` lands a delta whatever its caller asked for. A missing
+        table migrates as an empty table of ``schema``; with no schema it
+        is created by its first ``merge`` and migrates on the next call.
+        ``policy`` is recorded in the table's _META (``mor_init``)."""
+        if not self.mor_exists(name) and (schema is not None or self.exists(name)):
+            self.mor_init(name, self.read(name, schema), keys, policy, buckets)
 
     # -- snapshot versioning (Delta-lite time travel) ----------------------
     # Each write lands in an immutable {table}/_v/{N}/ dir; a one-line
@@ -444,11 +519,7 @@ class TableStore:
             "schema": df.schema.json(),
         }
         if policy is not None:
-            meta["policy"] = {
-                "overwrite": list(policy.get("overwrite", ())),
-                "coalesce": list(policy.get("coalesce", ())),
-                "keep_first": list(policy.get("keep_first", ())),
-            }
+            meta["policy"] = {k: list(policy.get(k, ())) for k in _CLASSES}
         if buckets:
             if "_bucket" in df.columns:
                 raise ValueError("'_bucket' is reserved for the bucketed MOR layout")
@@ -492,20 +563,14 @@ class TableStore:
         with self._mor_writer_lock(name):
             meta = self._mor_meta(name)
             if meta.get("policy") is not None:
-                if meta["policy"] == {
-                    k: list(policy.get(k, ())) for k in ("overwrite", "coalesce", "keep_first")
-                }:
+                if meta["policy"] == {k: list(policy.get(k, ())) for k in _CLASSES}:
                     return
                 raise ValueError(
                     f"MOR table {name!r} already has a different policy; "
                     "reinterpreting landed deltas is not supported"
                 )
             self._mor_compact_locked(name)
-            meta["policy"] = {
-                "overwrite": list(policy.get("overwrite", ())),
-                "coalesce": list(policy.get("coalesce", ())),
-                "keep_first": list(policy.get("keep_first", ())),
-            }
+            meta["policy"] = {k: list(policy.get(k, ())) for k in _CLASSES}
             tmp = self._mor_dir(name, "_META.tmp")
             with open(tmp, "w") as f:
                 json.dump(meta, f)
@@ -529,10 +594,12 @@ class TableStore:
     def _mor_upsert_locked(
         self, name: str, df: DataFrame, classes: dict | None = None
     ) -> int:
-        """Land one batch as the next delta. Rows may carry a boolean
-        ``_deleted`` tombstone column; within a batch the caller provides
-        at most one row per key (the batch is a statement, not a log) —
-        ENFORCED after the delta materializes: duplicate keys would make
+        """Land one batch as the next delta and return its sequence
+        number; an empty batch lands nothing and returns 0. Rows may
+        carry a boolean ``_deleted`` tombstone column; within a batch the
+        caller provides at most one row per key (the batch is a
+        statement, not a log) — ENFORCED after the delta materializes:
+        duplicate keys would make
         the fold's per-key windows tie on ``_seq`` and silently break the
         COW-parity guarantee, so a duplicate batch fails loudly instead.
 
@@ -561,7 +628,7 @@ class TableStore:
                     f"mor_upsert({name!r}): per-statement classes require a "
                     "policy table (latest-wins deltas replace rows wholesale)"
                 )
-            good = {"overwrite", "coalesce", "keep_first"}
+            good = set(_CLASSES)
             if set(classes) - good:
                 raise ValueError(f"unknown class(es): {sorted(set(classes) - good)}")
             named = [c for k in good for c in classes.get(k, ())]
@@ -606,12 +673,16 @@ class TableStore:
             c = F.col(k).isNull()
             null_key = c if null_key is None else (null_key | c)
         checks = landed.agg(
+            F.count(F.lit(1)).alias("n"),
             (
                 F.count(F.lit(1))
                 - F.count_distinct(F.struct(*[F.col(k) for k in keys]))
             ).alias("d"),
             F.count(F.when(null_key, 1)).alias("nk"),
         ).collect()[0]
+        if not checks["n"]:  # an empty statement must not grow the chain
+            shutil.rmtree(tmp, ignore_errors=True)
+            return 0
         if checks["d"] or checks["nk"]:
             shutil.rmtree(tmp, ignore_errors=True)
             if checks["nk"]:
@@ -677,10 +748,7 @@ class TableStore:
         # LAZY localCheckpoint: first consumer materializes, later ones
         # read the blocks. Intra-TableStore only (runner builds one store
         # per run) — nothing persists across runs. At cluster scale the
-        # same seam is a durable checkpoint / persist(DISK) decision;
-        # JOBSPARK_MOR_READ_MEMO=0 opts out.
-        if os.environ.get("JOBSPARK_MOR_READ_MEMO", "1") == "0":
-            return self._mor_apply_deltas(name, meta, base, seqs)
+        # same seam is a durable checkpoint / persist(DISK) decision.
         try:
             base_stamp = os.stat(self._mor_dir(name, "base")).st_mtime_ns
         except OSError:
@@ -744,10 +812,10 @@ class TableStore:
                 # normalize deltas): the generalized one-pass fold
                 def _cls(c: str, s: int) -> str:
                     ov = overrides.get(s, {})
-                    for k in ("overwrite", "coalesce", "keep_first"):
+                    for k in _CLASSES:
                         if c in ov.get(k, ()):
                             return k
-                    for k in ("overwrite", "coalesce", "keep_first"):
+                    for k in _CLASSES:
                         if c in policy.get(k, ()):
                             return k
                     return "keep_first"  # the unclassified default

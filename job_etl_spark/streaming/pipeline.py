@@ -174,11 +174,12 @@ def foreach_batch_mor(
     atomic-swap rewrite, so concurrent readers see either view (both
     identical).
 
-    This is the MOR side — the documented DEFAULT for large mutable
-    tables (COVERAGE.md "Choosing COW vs MOR", measured by the r7 soak:
-    flat p50 across a 10× base vs COW's proportional growth); its batch
-    twins are ``run_rank(mor=True)`` and ``run_normalize(mor=True)`` in
-    ``pipeline/runner.py``. ``policy`` passes the per-column
+    This is the MOR side, for fact-sized mutable tables (COVERAGE.md
+    "Choosing COW vs MOR": the r7 soak measured a flat p50 across a 10×
+    base vs COW's proportional growth, while the composed batch DAG at
+    200-row to 10k-row batches ran 2–2.5× slower on MOR); its batch twin
+    is ``TableStore.merge`` on a table migrated to MOR, where the layout
+    is chosen once per table. ``policy`` passes the per-column
     COALESCE-merge classes to ``mor_init`` (a streaming J3: each batch is
     a merge STATEMENT folded at read time, not a row image) — omit it for
     latest-wins row-image streams. A replayed batch is idempotent under

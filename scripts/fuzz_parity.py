@@ -19,6 +19,8 @@ for between-round confidence sweeps:
      bucketed store layouts, compaction) == sequential COW merge chain
      (random policies, tombstones, revives, partial columns, empty
      batches)
+  9. per-statement fold and ``TableStore.merge`` on both layouts ==
+     pure-Python sequential oracle
 
 Usage: python scripts/fuzz_parity.py [--examples 2000] [--seed 0]
 Prints one PASS/FAIL line per invariant; exits non-zero on any FAIL.
@@ -433,7 +435,7 @@ def fuzz_mor_fold(spark, rng: random.Random, rounds: int) -> int:
         merge_upsert,
         merge_upsert_onto,
     )
-    from job_etl_spark.pipeline.runner import TableStore
+    from job_etl_spark.pipeline.store import TableStore
 
     COLS = ["c0", "c1", "c2", "c3"]
     TYPES = {"c0": "string", "c1": "int", "c2": "string", "c3": "array<int>"}
@@ -636,8 +638,9 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
     included), coalesce takes it only when non-NULL, keep-first is
     COALESCE(base, statement) (first NON-NULL wins, so a null base slot
     may still be filled) — tombstones delete, and a revive inserts
-    fresh. Every Nth corpus also round-trips the REAL TableStore layout
-    (flat and bucketed, plus a compaction)."""
+    fresh. Every Nth corpus also round-trips ``TableStore.merge`` on the
+    REAL merge-on-read layout (flat and bucketed, plus a compaction), and
+    every tombstone-free corpus on the copy-on-write layout."""
     import shutil
     import tempfile
 
@@ -647,7 +650,7 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
         fold_upsert_statements,
         merge_statements_onto,
     )
-    from job_etl_spark.pipeline.runner import TableStore
+    from job_etl_spark.pipeline.store import TableStore
 
     COLS = ["c0", "c1", "c2", "c3"]
     TYPES = {"c0": "string", "c1": "int", "c2": "string", "c3": "array<int>"}
@@ -778,14 +781,19 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
             print(f"  statement-oracle mismatch (corpus {rd})")
             continue
 
-        # ---- store round-trip every 5th corpus --------------------------
-        if rd % 5 == 0:
+        # ---- TableStore.merge round-trip: the MOR layout every 5th
+        # corpus, the COW layout on every corpus without tombstones (COW
+        # statements carry no tombstones) --------------------------------
+        tombstones = any(v is None for rows, _, _ in batches for _, v in rows)
+        layouts = (["mor"] if rd % 5 == 0 else []) + ([] if tombstones else ["cow"])
+        for layout in layouts:
             root = tempfile.mkdtemp(prefix="fuzz_stmt_")
             try:
                 store = TableStore(spark, root)
                 buckets = rng.choice([None, 4]) if rd % 10 == 0 else None
                 store.write("t", base)
-                store.mor_init("t", store.read("t"), ["k"], policy=policy, buckets=buckets)
+                if layout == "mor":
+                    store.mor_migrate("t", ["k"], policy, buckets)
                 for rows, carried, stmt_cls in batches:
                     if not rows:
                         continue
@@ -801,9 +809,11 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
                         + ", ".join(f"{c} {TYPES[c]}" for c in carried)
                         + ", _deleted boolean",
                     )
-                    store.mor_upsert(
+                    store.merge(
                         "t",
-                        d,
+                        d if layout == "mor" else d.drop("_deleted"),
+                        ["k"],
+                        policy,
                         classes=(
                             {
                                 cl: [c for c in carried if stmt_cls[c] == cl]
@@ -815,8 +825,11 @@ def fuzz_statement_oracle(spark, rng: random.Random, rounds: int) -> int:
                     )
                 if canon(store.read("t")) != want:
                     bad += 1
-                    print(f"  statement-oracle STORE mismatch (corpus {rd}, buckets={buckets})")
-                elif batches:
+                    print(
+                        f"  statement-oracle STORE mismatch (corpus {rd}, {layout}, "
+                        f"buckets={buckets})"
+                    )
+                elif batches and layout == "mor":
                     store.mor_compact("t")
                     if canon(store.read("t")) != want:
                         bad += 1

@@ -130,7 +130,7 @@ def soak_lsh(
 
     from pyspark.sql import functions as F
 
-    from job_etl_spark.pipeline.runner import TableStore
+    from job_etl_spark.pipeline.store import TableStore
     from job_etl_spark.streaming.pipeline import foreach_batch_lsh_neardup
     from job_etl_spark.tables import table as load_table
 
@@ -277,7 +277,7 @@ def soak_upsert(
 
     from pyspark.sql import functions as F
 
-    from job_etl_spark.pipeline.runner import TableStore
+    from job_etl_spark.pipeline.store import TableStore
     from job_etl_spark.streaming.pipeline import (
         foreach_batch_merge,
         foreach_batch_mor,
@@ -363,7 +363,7 @@ def soak_upsert_policy(
 
     from pyspark.sql import functions as F
 
-    from job_etl_spark.pipeline.runner import TableStore
+    from job_etl_spark.pipeline.store import TableStore
     from job_etl_spark.streaming.pipeline import foreach_batch_mor
 
     store = TableStore(spark, str(workdir / "upsert_policy"))

@@ -134,37 +134,46 @@ def test_banded_near_threshold_pairs_exact(spark):
     assert got == {(1, 2, 8), (2, 3, 1)}  # (1,3) is 9 bits apart — excluded
 
 
-def test_arrow_fold_matches_expr_fold(spark, monkeypatch):
-    """JOBSPARK_ARROW_FOLD=1 (the vectorized numpy signature fold) must be
-    bit-identical to the default interpreted-HOF fold — same strict-
-    positive rule, same integer math — including empty/NULL texts and the
-    wide (two-half) signature."""
-    from job_etl_spark.ml.dedup import ARROW_FOLD_ENV, with_simhash, with_simhash_wide
+def test_simhash_fold_matches_python_fold(spark):
+    """The interpreted-HOF signature fold must equal a plain-Python
+    strict-positive fold (bit j set iff more token hashes have bit j set
+    than clear), for both halves of the wide signature, including empty
+    and NULL texts (an empty text is one empty token; NULL gives NULL)."""
+    import hashlib
 
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, ""),
-            (4, None),
-            (5, "a"),
-            (6, "repeat repeat repeat repeat repeat repeat repeat"),
-        ],
-        "doc_id long, text string",
-    )
-    monkeypatch.delenv(ARROW_FOLD_ENV, raising=False)
-    expr_rows = sorted(
-        with_simhash(docs).select("doc_id", "simhash").collect()
-    )
-    expr_wide = sorted(
-        with_simhash_wide(docs).select("doc_id", "sim_hi", "sim_lo").collect()
-    )
-    monkeypatch.setenv(ARROW_FOLD_ENV, "1")
-    arrow_rows = sorted(
-        with_simhash(docs).select("doc_id", "simhash").collect()
-    )
-    arrow_wide = sorted(
-        with_simhash_wide(docs).select("doc_id", "sim_hi", "sim_lo").collect()
-    )
-    assert arrow_rows == expr_rows
-    assert arrow_wide == expr_wide
+    from job_etl_spark.ml.dedup import with_simhash, with_simhash_wide
+
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "the quick brown fox jumps over the lazy cat",
+        3: "",
+        4: None,
+        5: "a",
+        6: "repeat repeat repeat repeat repeat repeat repeat",
+    }
+
+    def fold(hashes):
+        out = 0
+        for j in range(60):
+            if sum(1 if h >> j & 1 else -1 for h in hashes) > 0:
+                out |= 1 << j
+        return out
+
+    def halves(text):
+        if text is None:
+            return None, None
+        digests = [hashlib.md5(t.encode()).hexdigest() for t in text.lower().split(" ")]
+        return (
+            fold([int(d[:15], 16) for d in digests]),
+            fold([int(d[15:30], 16) for d in digests]),
+        )
+
+    want = {k: halves(t) for k, t in texts.items()}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {r[0]: r[1] for r in with_simhash(docs).select("doc_id", "simhash").collect()}
+    assert got == {k: hi for k, (hi, _) in want.items()}
+    wide = {
+        r[0]: (r[1], r[2])
+        for r in with_simhash_wide(docs).select("doc_id", "sim_hi", "sim_lo").collect()
+    }
+    assert wide == want

@@ -46,8 +46,14 @@ def test_full_pipeline(spark):
 
 def test_pipeline_with_company_candidates(spark):
     """When a cached candidates table exists, the enrich stage runs the
-    fuzzy company matcher and stamps enriched_at on every pending row."""
+    fuzzy company matcher and stamps enriched_at on every pending row —
+    also on a later batch, whose new company rows lack the match columns
+    the first batch added to staging_companies."""
     import datetime as dt
+
+    from job_etl_spark.pipeline.runner import run_enrich, run_normalize
+    from job_etl_spark.sources.base import JobPostingRaw, land_raw
+    from job_etl_spark.sources.mock_adapter import MockAdapter
 
     wh = tempfile.mkdtemp(prefix="jobspark_cand_")
     store = TableStore(spark, wh)
@@ -56,6 +62,7 @@ def test_pipeline_with_company_candidates(spark):
             ("Acme Corp", "Acme Corporation", 4.4),
             ("Acme Corp", "Acme Corp", 4.1),
             ("Globex Inc", "Globex", 3.8),
+            ("Nimbus Labs 0", "Nimbus Labs 0", 4.0),
         ],
         "search_name string, candidate_name string, candidate_rating double",
     )
@@ -68,6 +75,27 @@ def test_pipeline_with_company_candidates(spark):
     assert matched["Acme Corp"] == "Acme Corp"
     assert matched["Globex Inc"] == "Globex"
     assert matched["Initech LLC"] is None  # no candidates → skipped
+
+    # batch 2 brings three new companies, one with a candidate
+    ts2 = dt.datetime(2026, 1, 2, 7, 0, 0)
+    template = MockAdapter(num_jobs=1).fetch_all()[0]
+    novel = [
+        JobPostingRaw(
+            source=template.source,
+            payload={**template.payload, "company": f"Nimbus Labs {j}"},
+        )
+        for j in range(3)
+    ]
+    store.write("raw_job_postings", land_raw(spark, novel, ts2), mode="append")
+    run_normalize(store, MockAdapter(), min_collected_at=ts2, run_ts=ts2)
+    stats2 = run_enrich(store, run_ts=ts2)
+    assert stats2["companies_matched"] == 1
+    comp2 = {r["name"]: r for r in store.read("staging_companies").collect()}
+    assert len(comp2) == len(matched) + 3
+    assert all(r["enriched_at"] is not None for r in comp2.values())
+    assert comp2["Nimbus Labs 0"]["matched_name"] == "Nimbus Labs 0"
+    assert comp2["Nimbus Labs 1"]["matched_name"] is None  # skipped
+    assert comp2["Acme Corp"]["matched_name"] == "Acme Corp"  # batch 1 kept
 
 
 def test_pipeline_idempotent_rerun(spark):
@@ -142,7 +170,7 @@ def test_rank_writeback_via_mor(spark):
     assert view.count() == view.select("hash_key").distinct().count() == 30
 
 
-def test_normalize_writeback_via_mor(spark):
+def test_normalize_writeback_via_mor(spark, monkeypatch):
     """J3 via merge-on-read (r8 verdict #1): the staging upsert lands each
     normalized batch as ONE delta — O(batch) per run instead of the COW
     path's full-outer join + O(table) rewrite — and the read-time fold
@@ -193,10 +221,11 @@ def test_normalize_writeback_via_mor(spark):
     assert st.where(F.col("first_seen_at") == F.lit(ts1)).count() == 30
     assert st.where(F.col("seniority_enrichment_status") == "not_tried").count() == 0
 
-    # layout invariants: enrich's rewrite replaced the base and cleared
-    # deltas; the two post-enrich batches are deltas 1-2; the base files
-    # were never touched by a delta write; the stale COW files are gone
-    assert mor.mor_deltas("staging_job_postings") == [1, 2]
+    # layout invariants: the layout belongs to the table, so the plain
+    # (mor=False) enrich lands its statement as delta 2 between the
+    # normalize batches 1, 3 and 4; the base files were never touched by
+    # a delta write; the stale COW files are gone
+    assert mor.mor_deltas("staging_job_postings") == [1, 2, 3, 4]
     assert not glob.glob(os.path.join(mor.path("staging_job_postings"), "*.parquet"))
     base_glob = os.path.join(
         mor.path("staging_job_postings"), "_mor", "base", "*.parquet"
@@ -207,20 +236,22 @@ def test_normalize_writeback_via_mor(spark):
     run_normalize(
         mor, MockAdapter(), min_collected_at=dt.datetime(2030, 1, 1), run_ts=ts3, mor=True
     )
-    assert mor.mor_deltas("staging_job_postings") == [1, 2]
+    assert mor.mor_deltas("staging_job_postings") == [1, 2, 3, 4]
 
     # compaction folds the policy deltas; the merged view is unchanged
     before = canon(mor)
-    assert mor.mor_compact("staging_job_postings") == 2
+    assert mor.mor_compact("staging_job_postings") == 4
     assert mor.mor_deltas("staging_job_postings") == []
     assert canon(mor) == before
     assert {f: os.path.getmtime(f) for f in glob.glob(base_glob)} != base_before
 
-    # compact_every bounds the chain in-line: a replay run at threshold 1
-    # lands its delta and immediately folds it; view unchanged (idempotent)
-    run_normalize(
-        mor, MockAdapter(), min_collected_at=ts2, run_ts=ts3, mor=True, compact_every=1
-    )
+    # the store bounds the chain in-line: below its threshold a replay run
+    # lands a delta; the run that reaches it folds the chain into the
+    # base; the view is unchanged throughout (replays are idempotent)
+    monkeypatch.setattr("job_etl_spark.pipeline.store.MOR_COMPACT_AT", 2)
+    run_normalize(mor, MockAdapter(), min_collected_at=ts2, run_ts=ts3)
+    assert mor.mor_deltas("staging_job_postings") == [1]
+    run_normalize(mor, MockAdapter(), min_collected_at=ts2, run_ts=ts3)
     assert mor.mor_deltas("staging_job_postings") == []
     assert canon(mor) == before
 
@@ -228,8 +259,8 @@ def test_normalize_writeback_via_mor(spark):
 def test_mor_table_visible_to_downstream_stages(spark):
     """A --mor write-back must never be invisible downstream (r8 ADVICE):
     store.read redirects MOR tables to the merged view, so marts/dq/
-    report see scores written as deltas, and a marts rewrite folds INTO
-    the MOR layout instead of forking back to COW."""
+    report see scores written as deltas, and a later plain marts run
+    writes INTO the MOR layout instead of forking back to COW."""
     from job_etl_spark.pipeline import report as report_mod
     from job_etl_spark.pipeline.runner import run_marts, run_rank
 
@@ -247,12 +278,13 @@ def test_mor_table_visible_to_downstream_stages(spark):
     )
     assert digest["unique_jobs"] == 30 and len(digest["top_jobs"]) > 0
 
-    # a marts rewrite lands in the MOR base (deltas folded + cleared),
-    # not a parallel COW copy — and the carried rank scores survive
+    # a plain marts run on the MOR table goes through the MOR layout
+    # (here with nothing new, so no delta lands), never a parallel COW
+    # copy — and the carried rank scores survive
     stats = run_marts(store)
-    assert stats["fact_rows"] == 30
+    assert stats["fact_rows"] == 30 and stats["fact_new"] == 0
     assert store.mor_exists("fact_jobs")
-    assert store.mor_deltas("fact_jobs") == []
+    assert store.mor_deltas("fact_jobs") == [1]
     import glob as _glob
     import os as _os
 
@@ -262,7 +294,7 @@ def test_mor_table_visible_to_downstream_stages(spark):
     # a no-op rank (nothing unranked) must not append an empty delta
     stats2 = run_rank(store, mor=True)
     assert stats2["ranked_now"] == 0
-    assert store.mor_deltas("fact_jobs") == []
+    assert store.mor_deltas("fact_jobs") == [1]
 
 
 def test_marts_writeback_via_mor(spark):
@@ -415,7 +447,7 @@ def test_cli_stage_sequence_and_exit_codes():
 
     wh = tempfile.mkdtemp(prefix="jobspark_cli_wh_")
     code = f"""
-import sys
+import json, os, sys
 from job_etl_spark.pipeline.runner import main
 rc1 = main(["pipeline", "--warehouse", {wh!r}, "--num-jobs", "40"])
 rc2 = main(["dq", "--warehouse", {wh!r}])
@@ -425,7 +457,11 @@ rc5 = main(["extract", "--warehouse", {wh!r}, "--num-jobs", "10"])
 rc6 = main(["normalize", "--warehouse", {wh!r}])
 rc7 = main(["marts", "--warehouse", {wh!r}])
 rc8 = main(["normalize", "--warehouse", {wh!r}, "--mor"])
-print("RCS", rc1, rc2, rc3, rc4, rc5, rc6, rc7, rc8)
+d8 = sorted(os.listdir({wh!r} + "/staging_job_postings/_mor/delta"))
+rc9 = main(["normalize", "--warehouse", {wh!r}])  # the layout stays MOR
+d9 = sorted(os.listdir({wh!r} + "/staging_job_postings/_mor/delta"))
+print("RCS", rc1, rc2, rc3, rc4, rc5, rc6, rc7, rc8, rc9)
+print("DELTAS", json.dumps([d8, d9]))
 """
     out = subprocess.run(
         [sys.executable, "-c", code],
@@ -436,11 +472,16 @@ print("RCS", rc1, rc2, rc3, rc4, rc5, rc6, rc7, rc8)
     )
     assert out.returncode == 0, out.stderr[-2000:]
     rcs = [ln for ln in out.stdout.splitlines() if ln.startswith("RCS")][0].split()[1:]
-    assert rcs == ["0", "0", "0", "2", "0", "0", "0", "0"], (rcs, out.stderr[-500:])
+    assert rcs == ["0", "0", "0", "2", "0", "0", "0", "0", "0"], (rcs, out.stderr[-500:])
     import os as _os
 
-    # the --mor run migrated staging into the merge-on-read layout
+    # the --mor run migrated staging into the merge-on-read layout, and
+    # the plain normalize after it landed one more delta there
     assert _os.path.exists(f"{wh}/staging_job_postings/_mor/_META")
+    d8, d9 = json.loads(
+        [ln for ln in out.stdout.splitlines() if ln.startswith("DELTAS")][0][len("DELTAS"):]
+    )
+    assert len(set(d9) - set(d8)) == 1 and set(d8) <= set(d9), (d8, d9)
 
     # publish + notify stages against the same warehouse (S11/S12 CLI
     # surface: publisher_hyper/main.py, notifier/main.py)
@@ -536,7 +577,13 @@ def test_enrich_writeback_via_mor(spark):
     import glob
     import os
 
-    from job_etl_spark.pipeline.runner import run_enrich, run_extract, run_normalize
+    from job_etl_spark.pipeline.runner import (
+        ENRICHED_COLS,
+        run_enrich,
+        run_extract,
+        run_normalize,
+    )
+    from job_etl_spark.schema import STAGING_SCHEMA
     from job_etl_spark.sources.mock_adapter import MockAdapter
 
     ts1 = dt.datetime(2026, 2, 1, 7, 0, 0)
@@ -549,6 +596,12 @@ def test_enrich_writeback_via_mor(spark):
             for r in df.select(*sorted(df.columns)).collect()
         ]
         return sorted(rows, key=repr)
+
+    def canon_cols(store, cols):
+        return sorted(
+            (tuple(r) for r in store.read("staging_job_postings").select(*cols).collect()),
+            key=repr,
+        )
 
     def drive(wh, mor, buckets=None):
         store = TableStore(spark, wh)
@@ -563,7 +616,12 @@ def test_enrich_writeback_via_mor(spark):
         # batch 2 fully overlaps batch 1's identities, so that enrich is a
         # no-op (0 pending) — a forced full recompute exercises a SECOND
         # enrich statement on top of the mixed stack in both layouts
+        uncarried = [c for c in STAGING_SCHEMA.names if c not in ENRICHED_COLS]
+        before = canon_cols(store, uncarried)
         run_enrich(store, run_ts=ts2, include_existing=True, mor=mor)
+        # the partial statement leaves the columns it does not carry as
+        # they were
+        assert canon_cols(store, uncarried) == before
         return store
 
     cow = drive(tempfile.mkdtemp(prefix="jobspark_j6cow_"), mor=False)
